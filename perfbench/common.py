@@ -17,7 +17,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "pei_nwdaf_data_ingestion_spark"
-SETUPS = 3  # set-ups per run; setup_s is their median
+SETUPS = 3  # set-ups per run; the first, cold one is setup_s
 _T0 = time.perf_counter()
 
 
@@ -65,8 +65,10 @@ def start_session(cores: int | None = None):
 
 def repeated_setup(make):
     """Run `make(spark, i)` after a fresh session start, SETUPS times; all
-    sessions but the last are stopped again.  Returns the live
-    (spark, env), the set-up times and the session-start times."""
+    sessions but the last are stopped again.  Only the first set-up
+    launches the JVM; the later ones start a session in the running JVM.
+    Returns the live (spark, env), the set-up times and the session-start
+    times."""
     total, session = [], []
     spark = env = None
     for i in range(SETUPS):

@@ -29,10 +29,12 @@ class BatchRecorder:
     """foreachBatch wrapper around the program's sinks.
 
     In a traced run every batch runs under its own Spark job group, so
-    jobs, stages and tasks are counted per batch.  In traced batches (every other one when
-    tracing is on) the normalized batch is materialized first, so the
-    normalize and sink times split apart; the rest run the sinks on the
-    lazy batch exactly as an untraced run does."""
+    jobs, stages and tasks can be counted per batch once the run is over
+    (`count_jobs`).  A split batch materializes the normalized batch first,
+    so the normalize and sink times split apart; the rest run the sinks on
+    the lazy batch exactly as an untraced run does.  `split_every` picks the
+    split batches: 2 (the default when tracing is on) splits every other
+    one, 1 every one, 0 none."""
 
     def __init__(self, spark, sink_dir: str, tracer, counter, ws_sink=None) -> None:
         self.spark = spark
@@ -40,6 +42,7 @@ class BatchRecorder:
         self.tracer = tracer
         self.counter = counter
         self.ws_sink = ws_sink
+        self.split_every = 2 if tracer.enabled else 0
         self.marks: dict[int, dict] = {}
         os.makedirs(sink_dir, exist_ok=True)
 
@@ -50,8 +53,8 @@ class BatchRecorder:
         if self.tracer.enabled:
             self.spark.sparkContext.setJobGroup(group, group)
         kafka = kafka_foreach_batch(TOPIC, "in-process", ProducerFactory(self.sink_dir, epoch))
-        traced = self.tracer.enabled and epoch % 2 == 1
-        mark = {"traced": traced, "start": time.perf_counter()}
+        traced = self.split_every > 0 and epoch % self.split_every == self.split_every - 1
+        mark = {"traced": traced, "start": time.perf_counter(), "jobs": (0, 0, 0)}
         if traced:
             with self.tracer.span("ingest.add_batch", request=epoch):
                 with self.tracer.span("nef.normalize", request=epoch):
@@ -69,8 +72,16 @@ class BatchRecorder:
             if self.ws_sink is not None:
                 self.ws_sink(batch, epoch)
         mark["end"] = time.perf_counter()
-        mark["jobs"] = self.counter.count(group) if self.tracer.enabled else (0, 0, 0)
+        if self.tracer.enabled:
+            mark["group"] = group
         self.marks[epoch] = mark
+
+    def count_jobs(self) -> None:
+        """Fill each grouped batch's (jobs, stages, tasks) from the status
+        tracker; done after the run, so the counting costs no batch time."""
+        for mark in self.marks.values():
+            if "group" in mark:
+                mark["jobs"] = self.counter.count(mark["group"])
 
 
 def progress_layers(progress: list, marks: dict[int, dict]) -> dict:

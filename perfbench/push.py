@@ -9,7 +9,15 @@ continuously triggered `build_ingest_stream` reads (dim from the same
 its registry per notify.  Operations come from `gen.push_schedule` at
 RATE per second, sent by SENDERS threads on a fixed schedule regardless of
 how the program keeps up; every latency is taken from the operation's due
-time.  The probe ends when the stream has committed every spooled file.
+time.
+
+The probe has two phases.  In the main phase (N_OPS operations) the sinks
+run on the lazy batch, as in an untraced run; only the store and HTTP
+calls carry spans, which cost two clock reads each.  The push end-to-end
+numbers come from this phase.  Once it has drained, N_TAIL more
+notifications are sent with every batch split and traced, which gives the
+per-layer shares and the push tracing overhead.  The probe ends when the
+stream has committed every spooled file.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from tracing import Tracer, median, pct
 
 RATE = 2.0  # POST/s
 N_OPS = 16
+N_TAIL = 4  # traced notifications after the main phase
 SENDERS = 2
 N_WS_KEYS = 3  # the golden key and the two hottest keys
 DRAIN_TIMEOUT_S = 120
@@ -177,6 +186,15 @@ def _op_of(rec: dict, n_ops: int, golden_ops: dict) -> int | None:
     return golden_ops.get((rec.get("ts_unix"), rec.get("event")))
 
 
+def _drain(q, timeout: float) -> bool:
+    """processAllAvailable with a time limit; True when every spooled file
+    was committed in time."""
+    t = threading.Thread(target=q.processAllAvailable, daemon=True)
+    t.start()
+    t.join(timeout)
+    return not t.is_alive()
+
+
 def run(spark, env, args, counter, work: str, subs) -> dict:
     """The probe on the live session `spark` and the backlog's store, with
     its own tracer."""
@@ -187,7 +205,7 @@ def run(spark, env, args, counter, work: str, subs) -> dict:
     tracer = Tracer(True)
     store = TracedStore(env.store, tracer)
     ws_keys = [s["notif_id"] for s in subs[:N_WS_KEYS]]
-    ops = gen.push_schedule(args.seed, N_OPS, RATE, subs, ws_keys)
+    ops = gen.push_schedule(args.seed, N_OPS + N_TAIL, RATE, subs, ws_keys)
     spool = os.path.join(work, "push-spool")
     egress = counting_egress()
     shim = NotifyHTTPShim(spool, known_notif_ids=lambda: [s["notif_id"] for s in store.list()],
@@ -195,6 +213,7 @@ def run(spark, env, args, counter, work: str, subs) -> dict:
     host, port = shim.start()
     rec = BatchRecorder(spark, os.path.join(work, "push-sink"), tracer, counter,
                         ws_sink=ws_fanout_foreach_batch(egress))
+    rec.split_every = 0
     q = (build_ingest_stream(spark, spool, env.store.load()).writeStream
          .foreachBatch(rec).option("checkpointLocation", os.path.join(work, "push-ckpt"))
          .start())
@@ -226,13 +245,17 @@ def run(spark, env, args, counter, work: str, subs) -> dict:
         mon.start()
         t0 = time.perf_counter()
         wall0 = time.time()
-        results = open_loop(host, port, ops, tracer, t0)
-        log(f"push: {len(ops)} ops sent; draining")
-        drained = threading.Thread(target=q.processAllAvailable, daemon=True)
-        drained.start()
-        drained.join(DRAIN_TIMEOUT_S)
+        results = open_loop(host, port, ops[:N_OPS], tracer, t0)
+        log(f"push: {N_OPS} ops sent; draining")
+        drained = _drain(q, DRAIN_TIMEOUT_S)
         stop.set()
         mon.join()
+        main_epochs = set(rec.marks)
+
+        rec.split_every = 1
+        t_tail = time.perf_counter() - ops[N_OPS]["due"]
+        results += open_loop(host, port, ops[N_OPS:], tracer, t_tail)
+        drained = _drain(q, DRAIN_TIMEOUT_S) and drained
         time.sleep(0.5)  # frames already sent are in flight to the subscribers
     finally:
         for s in subscribers:
@@ -241,13 +264,19 @@ def run(spark, env, args, counter, work: str, subs) -> dict:
         shim.stop()
         egress.stop()
     log("push: drained")
-    return _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
-                     backlog_max[0], progress_layers(q.recentProgress, rec.marks),
-                     not drained.is_alive())
+    rec.count_jobs()
+    due_at = [t0 + op["due"] for op in ops[:N_OPS]] + [t_tail + op["due"] for op in ops[N_OPS:]]
+    main = {e: m for e, m in rec.marks.items() if e in main_epochs}
+    tail = {e: m for e, m in rec.marks.items() if e not in main_epochs}
+    return _evaluate(ops, results, due_at, rec, subscribers, egress, tracer, wall0,
+                     backlog_max[0], progress_layers(q.recentProgress, main),
+                     progress_layers(q.recentProgress, tail), tail, drained)
 
 
-def _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
-              backlog_max, lay, drained) -> dict:
+def _evaluate(ops, results, due_at, rec, subscribers, egress, tracer, wall0,
+              backlog_max, lay, lay_tail, tail, drained) -> dict:
+    """Checks over every operation; end-to-end numbers over the main phase
+    (the first N_OPS operations), layer shares over the traced tail."""
     n = len(ops)
     golden_ops = {(op["golden"]["ts_unix"], op["golden"]["event"]): i
                   for i, op in enumerate(ops) if "golden" in op}
@@ -261,7 +290,8 @@ def _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
                 continue
             kafka.setdefault(i, {}).setdefault(r["event"], 0)
             kafka[i][r["event"]] += 1
-            deliveries.append(wall)
+            if i < N_OPS:
+                deliveries.append(wall)
             if "golden" in ops[i] and r != ops[i]["golden"]:
                 kafka[i]["golden_mismatch"] = 1
     # WS frames per op
@@ -278,10 +308,12 @@ def _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
                 ws_golden_ok = False
 
     failed, lost_late, delivery, acks, lags = 0, 0, [], [], []
-    for i, (op, res) in enumerate(zip(ops, results)):
+    for i, (op, res, due) in enumerate(zip(ops, results, due_at)):
         ok = res.get("status") == op["status"]
-        acks.append(res["done"] - (t0 + op["due"]) if ok else float("inf"))
-        lags.append(res["sent"] - (t0 + op["due"]))
+        timed = i < N_OPS
+        if timed:
+            acks.append(res["done"] - due if ok else float("inf"))
+            lags.append(res["sent"] - due)
         want = sum(op["records"].values())
         got = kafka.get(i, {})
         if op.get("late"):
@@ -294,18 +326,17 @@ def _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
             if op["notif_id"] in ws_keys:
                 times = ws.get(i, [])
                 ok = ok and len(times) == want
-                delivery += [t - (t0 + op["due"]) for t in times]
-                delivery += [float("inf")] * max(0, want - len(times))
+                if timed:
+                    delivery += [t - due for t in times]
+                    delivery += [float("inf")] * max(0, want - len(times))
         failed += not ok
 
     self_t = tracer.self_times()
-    traced = [e for e in rec.marks if rec.marks[e]["traced"]]
-    cyc = sum(lay["trigger"].get(e, 0.0) for e in traced) or float("nan")
-    busy_traced = sum(rec.marks[e]["end"] - rec.marks[e]["start"] for e in traced)
-    n_delivered = len(deliveries)
+    cyc = sum(lay_tail["trigger"].values()) or float("nan")
+    busy_tail = sum(m["end"] - m["start"] for e, m in tail.items() if e in lay_tail["trigger"])
     span = max(deliveries) - wall0 if deliveries else float("nan")
     layers = {
-        "notify_push.records_per_s": n_delivered / span,
+        "notify_push.records_per_s": len(deliveries) / span,
         "notify_push.delivery_p50_s": median(delivery),
         "notify_push.delivery_p90_s": pct(delivery, 0.9),
         "notify_push.batch_p50_s": median(list(lay["trigger"].values())),
@@ -314,7 +345,9 @@ def _evaluate(ops, results, rec, subscribers, egress, tracer, t0, wall0,
         "notify_push.share.nef": self_t.get("nef.normalize", 0.0) / cyc,
         "notify_push.share.sinks": self_t.get("sinks.kafka", 0.0) / cyc,
         "notify_push.share.ws_egress": self_t.get("ws_egress.fanout", 0.0) / cyc,
-        "notify_push.share.ingest": (cyc - busy_traced + self_t.get("ingest.add_batch", 0.0)) / cyc,
+        "notify_push.share.ingest": (cyc - busy_tail + self_t.get("ingest.add_batch", 0.0)) / cyc,
+        "notify_push.trace_overhead_s": median(list(lay_tail["trigger"].values()))
+        - median(list(lay["trigger"].values())),
         "http_shim.ack_p50_s": median(acks),
         "http_shim.ack_p90_s": pct(acks, 0.9),
         "http_shim.status_mismatches": sum(r.get("status") != op["status"] for op, r in zip(ops, results)),

@@ -4,7 +4,7 @@ The ids are taken from the registry (`registry.RAW_QUERIES`) with default
 settings and run on fixture tables generated from the seed.  Two untimed
 passes pay codegen, JIT and index builds (the first is reported as
 queries.first_pass_s); then whole passes in a
-seeded shuffled order run until --seconds have passed (at least two).
+seeded shuffled order run until --seconds have passed (at least three).
 Each execution is builder call -> result materialized as (result_digest,
 row count) via `registry.append_result_digest`, and must match the first
 execution of the same id.
@@ -32,7 +32,9 @@ QUERY_IDS = [
     "multimodal_decode",         # multimodal_queries: mapInPandas decode
 ]
 SCALE = 0.01
-MIN_PASSES = 2
+# a pass takes 3.5-5 s, so three passes fill --seconds 10 on fast and slow
+# hosts alike and every run times the same work
+MIN_PASSES = 3
 
 
 def _prepare(spark, sf_dir: str) -> None:

@@ -9,8 +9,9 @@ program sees only those inputs, through its public modules.  The last line
 of stdout is one JSON object {correct, attempted, failed, metrics}: with
 --trace 0 the end-to-end metrics of BENCHMARK.json, with --trace 1 the
 per-layer ones.  The untraced run also prints, on the line before, the
-workload's metrics under their own names (records_per_s, delivery_p50_s,
-ack_p50_s, queries_per_s, ...).  See perfbench/DESIGN.md.
+workload's metrics under their own names: records_per_s and batch_p50_s
+for nef_backlog; queries_per_s, query_p50_s and query_p90_s for query_mix.
+See perfbench/DESIGN.md.
 """
 
 from __future__ import annotations
@@ -68,7 +69,8 @@ def main(argv=None) -> int:
               file=sys.stderr)
     if args.trace:
         layers = res["layers"]
-        layers["session.start_s"] = median(res["sessions"])
+        layers["session.start_s"] = res["sessions"][0]
+        layers["setup.warm_p50_s"] = median(res["setups"][1:])
         layers["process.rss_peak_mb"] = rss
         metrics = {}
         for name, unit in per_layer_units().items():
@@ -77,7 +79,7 @@ def main(argv=None) -> int:
         print(json.dumps({"workload": args.workload, "metrics": {
             k: {"value": _num(v), "unit": u} for k, (v, u) in res["named"].items()}}))
         metrics = {
-            "setup_s": {"value": median(res["setups"]), "unit": "s"},
+            "setup_s": {"value": res["setups"][0], "unit": "s"},
             "throughput_per_s": {"value": res["throughput"], "unit": "1/s"},
             "latency_p50_s": {"value": res["lat_p50"], "unit": "s"},
         }
