@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .materialize import materialize
+
 TABLES = (
     "region",
     "nation",
@@ -30,8 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # SPARK_GRAFT_CACHE=1 -> materialize base tables once into a repartitioned
 # in-memory columnar cache (bench.py sets it; correctness runs never do).
 # Rationale: the fixture files are SINGLE-row-group parquet, which hard-caps
@@ -41,9 +41,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # would (hot tables pinned via .cache() / a real lakehouse layout has many
 # row groups and needs none of this).  Cold-path plans - predicate pushdown,
 # column pruning - are unchanged and still exercised by tests + driver runs.
-_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Tables are held by materialize.py, one entry per (application, file).
 def _cache_on() -> bool:
     return os.environ.get("SPARK_GRAFT_CACHE", "0") == "1"
 
@@ -64,7 +62,8 @@ def _cold_fanout_on() -> bool:
 def _fanout_width(spark: SparkSession, size: int) -> int:
     """Partition width for a non-tiny table: at least the shuffle width so
     pre- and post-exchange task counts align, ~1 MiB/partition beyond that,
-    capped at the core count (probe matrix tools/probe_ppjoin.py)."""
+    capped at the core count (the r5 probe matrix is recorded in
+    _warm_table)."""
     shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
     return min(spark.sparkContext.defaultParallelism, max(shuf, size >> 20))
 
@@ -83,27 +82,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{table}.parquet")
     if _cache_on():
-        key = (spark.sparkContext.applicationId, path)
-        if key not in _CACHE:
-            df = _read(spark, path, table)
-            size = os.path.getsize(path)
-            if size < (256 << 10):
-                # tiny dims stay single-partition: they broadcast anyway,
-                # and per-task overhead would dominate
-                df = df.coalesce(1)
-            else:
-                # non-tiny tables fan out to AT LEAST the shuffle width:
-                # the previous ~1 MiB/partition rule left documents (0.59
-                # MiB at sf0.1) on ONE cached partition, starving every
-                # self-join pipeline above it (dedup_ppjoin_prefix measured
-                # 2x slower; BENCH_r05 / VERDICT r5 item 1).  Matching the
-                # shuffle width keeps pre- and post-exchange task counts
-                # aligned (probe matrix tools/probe_ppjoin.py: 8-partition
-                # cache beat both coalesce(1) and 32-partition at 2.2 s vs
-                # 4.1-4.3 s under the bench's shuffle=8).
-                df = df.repartition(_fanout_width(spark, size))
-            _CACHE[key] = df.cache()
-        return _CACHE[key]
+        return materialize(spark, path, (), lambda: _warm_table(spark, path, table))
     df = _read(spark, path, table)
     if _cold_fanout_on():
         size = os.path.getsize(path)
@@ -122,6 +101,26 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
                 _rechunked_path(spark, path, table, _fanout_width(spark, size))
             )
     return df
+
+
+def _warm_table(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """The SPARK_GRAFT_CACHE=1 form of one table: read, re-partitioned to
+    a width that keeps every core busy, and cached."""
+    df = _read(spark, path, table)
+    size = os.path.getsize(path)
+    if size < (256 << 10):
+        # tiny dims stay single-partition: they broadcast anyway,
+        # and per-task overhead would dominate
+        return df.coalesce(1).cache()
+    # non-tiny tables fan out to AT LEAST the shuffle width: the previous
+    # ~1 MiB/partition rule left documents (0.59 MiB at sf0.1) on ONE
+    # cached partition, starving every self-join pipeline above it
+    # (dedup_ppjoin_prefix measured 2x slower; BENCH_r05 / VERDICT r5 item
+    # 1).  Matching the shuffle width keeps pre- and post-exchange task
+    # counts aligned (r5 probe matrix: an 8-partition cache beat both
+    # coalesce(1) and 32-partition at 2.2 s vs 4.1-4.3 s for
+    # dedup_ppjoin_prefix under the bench's shuffle=8).
+    return df.repartition(_fanout_width(spark, size)).cache()
 
 
 _RECHUNK: dict[tuple[str, str], str] = {}
@@ -196,8 +195,3 @@ def gated_broadcast(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
         return F.broadcast(df)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views (for spark.sql queries)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

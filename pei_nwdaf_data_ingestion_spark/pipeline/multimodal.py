@@ -284,12 +284,10 @@ def extract_features(
     """
     if partitions:
         assets = assets.repartition(partitions)
-    extractor_factory = _make_feature_extractor
-
     if encoder is None:
+        extract = _make_feature_extractor()  # a closure: ships by value
 
         def _extract(batches):
-            extract = extractor_factory()
             for pdf in batches:
                 decoded = pdf["content"].map(extract)
                 yield pd.DataFrame(
@@ -353,10 +351,9 @@ def synthesize_media_assets(documents: DataFrame) -> DataFrame:
     image/audio/video on doc_id % 3, same rule as synthesize_assets).
     mapInPandas so the blobs enter Spark exactly the way real media would:
     as an Arrow binary column built Python-side."""
-    builder_factory = _make_media_builder
+    build = _make_media_builder()  # a closure: ships by value
 
     def _synth(batches):
-        build = builder_factory()
         names = {0: "image", 1: "audio", 2: "video"}
         for pdf in batches:
             ids = pdf["doc_id"].astype("int64")
@@ -386,10 +383,9 @@ def decode_media_stats(assets: DataFrame) -> DataFrame:
     BMP-sequence frame boundaries) and reduce the decoded pixel bytes or
     PCM samples to integer stats.  Replaces round 1-8's decode stub - the
     last NotImplementedError seam (VERDICT r8 item 4)."""
-    decoder_factory = _make_media_decoder
+    decode = _make_media_decoder()  # a closure: ships by value
 
     def _decode(batches):
-        decode = decoder_factory()
         for pdf in batches:
             rows = []
             for aid, mt, blob in zip(
@@ -449,21 +445,20 @@ def decode_media_units(
     fmt string it immediately drops (measured 1.8x on the audio shapes).
     Values are bit-identical to the full output projected to `columns`;
     the index columns are built as numpy vectors, never Python loops."""
-    decoder_factory = _make_media_decoder
+    decode = _make_media_decoder()  # a closure: ships by value
     all_names = [f.name for f in MEDIA_UNITS_SCHEMA.fields]
     if columns is None:
         want = all_names
     else:
-        # Reject unknown names (and, via set(), a bare-string argument whose
-        # characters would otherwise substring-match real column names): a
-        # silent empty/extra schema fails far from the call site.
-        unknown = set(columns) - set(all_names)
-        if unknown:
-            raise ValueError(
-                f"decode_media_units: unknown columns {sorted(unknown)}; "
-                f"valid names are {all_names}"
-            )
+        # Reject a bare string (it would iterate as characters), unknown
+        # names and an empty selection: a silent empty/extra schema fails
+        # far from the call site.
         want = [c for c in all_names if c in set(columns)]
+        if isinstance(columns, str) or set(columns) - set(want) or not want:
+            raise ValueError(
+                "decode_media_units: columns must be a non-empty sequence of "
+                f"names from {all_names}, got {columns!r}"
+            )
     schema = T.StructType(
         [f for f in MEDIA_UNITS_SCHEMA.fields if f.name in want]
     )
@@ -472,7 +467,6 @@ def decode_media_units(
     def _units(batches):
         import numpy as np
 
-        decode = decoder_factory()
         for pdf in batches:
             parts: dict[str, list] = {c: [] for c in want}
             for aid, mt, blob in zip(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..materialize import materialize
 from ..registry import query
 from .infostats import _ACF_DAILY
 
@@ -459,10 +460,47 @@ def time_pacf_lags(spark: SparkSession, sf: str) -> DataFrame:
 # local clustering coefficient over the supplier co-part projection
 # ---------------------------------------------------------------------------
 
-# support-2 market-basket projection + its edge count, built once per
-# (application, sf) like corpus_ops._TRI_PROJ_CACHE (bench.py clears both
-# next to the other index caches)
-_BASKET_PROJ_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
+def _basket_projection(
+    spark: SparkSession, sf: str
+) -> tuple[DataFrame, DataFrame, int, int]:
+    """graph_clustering_coeff's checkpointed support-2 market-basket
+    projection (p1 < p2), its forward adjacency and gate scalars (total
+    edges, max forward degree), built once per (application, sf) like
+    corpus_ops._tri_projection."""
+
+    def build() -> tuple[DataFrame, DataFrame, int, int]:
+        li = (
+            load(spark, sf, "lineitem")
+            .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+            .distinct()
+        )
+        a = li.select("o", F.col("p").alias("p1"))
+        b = li.select("o", F.col("p").alias("p2"))
+        proj = (
+            a.join(b, "o")
+            .filter(F.col("p1") < F.col("p2"))
+            .groupBy("p1", "p2")
+            .agg(F.count("*").alias("sup"))
+            .filter(F.col("sup") >= 2)
+            .select("p1", "p2")
+            .localCheckpoint(eager=True)
+        )
+        # the forward adjacency is both the gate source and the
+        # edge-iterator's broadcast build side - checkpoint it next to
+        # the projection so repeat invocations skip the collect_list agg;
+        # one combinable agg over it delivers BOTH gate scalars (sum of
+        # forward degrees = total edges, max forward degree = widest
+        # broadcast adjacency row)
+        adj = proj.groupBy("p1").agg(
+            F.sort_array(F.collect_list("p2")).alias("nbrs")
+        ).localCheckpoint(eager=True)
+        stats = adj.agg(
+            F.sum(F.size("nbrs")).alias("n"),
+            F.max(F.size("nbrs")).alias("mx"),
+        ).first()
+        return proj, adj, int(stats["n"] or 0), int(stats["mx"] or 0)
+
+    return materialize(spark, sf, (), build)
 
 
 @query(
@@ -540,48 +578,11 @@ def graph_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
     endpoints, so the credit stream never hits an exchange before its
     map-side-combinable sum; past the gate the wedge-enumeration
     shuffle spelling is the 100 TB fallback.  Projection + gate scalars
-    cache per (application, sf), so repeat invocations skip both the
-    build and the gate job (ADVICE r14)."""
+    materialize per (application, sf) (_basket_projection), so repeat
+    invocations skip both the build and the gate job (ADVICE r14)."""
     from .corpus_ops import TRI_BCAST_CAP, TRI_MAX_DEG_CAP
 
-    key = (spark.sparkContext.applicationId, sf)
-    cached = _BASKET_PROJ_CACHE.get(key)
-    if cached is None:
-        li = (
-            load(spark, sf, "lineitem")
-            .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-            .distinct()
-        )
-        a = li.select("o", F.col("p").alias("p1"))
-        b = li.select("o", F.col("p").alias("p2"))
-        proj = (
-            a.join(b, "o")
-            .filter(F.col("p1") < F.col("p2"))
-            .groupBy("p1", "p2")
-            .agg(F.count("*").alias("sup"))
-            .filter(F.col("sup") >= 2)
-            .select("p1", "p2")
-            .localCheckpoint(eager=True)
-        )
-        # one combinable agg over the checkpointed blocks delivers BOTH
-        # gate scalars (sum of forward degrees = total edges, max forward
-        # degree = widest broadcast adjacency row), reused by every later
-        # invocation
-        # the forward adjacency is both the gate source and the
-        # edge-iterator's broadcast build side - checkpoint it next to
-        # the projection so repeat invocations skip the collect_list agg
-        adj = proj.groupBy("p1").agg(
-            F.sort_array(F.collect_list("p2")).alias("nbrs")
-        ).localCheckpoint(eager=True)
-        stats = adj.agg(
-            F.sum(F.size("nbrs")).alias("n"),
-            F.max(F.size("nbrs")).alias("mx"),
-        ).first()
-        n_edges = int(stats["n"] or 0)
-        max_deg = int(stats["mx"] or 0)
-        _BASKET_PROJ_CACHE[key] = (proj, adj, n_edges, max_deg)
-    else:
-        proj, adj, n_edges, max_deg = cached
+    proj, adj, n_edges, max_deg = _basket_projection(spark, sf)
     deg = (
         proj.select(F.col("p1").alias("v"))
         .unionAll(proj.select(F.col("p2").alias("v")))

@@ -511,28 +511,36 @@ class TestRound6NonVacuous:
         assert [tuple(r) for r in fast] == [tuple(r) for r in degslow]
 
     def test_triangle_projection_cached_per_app(self, spark):
-        """r15: the projection + gate scalars cache per (application, sf)
-        - a second invocation reuses the checkpointed frame and runs no
-        gate job (ADVICE r14: the per-invocation count was pure
-        overhead)."""
+        """r15: the projection + gate scalars materialize per
+        (application, sf) - a second invocation reuses the checkpointed
+        frame and runs no gate job (ADVICE r14: the per-invocation count
+        was pure overhead)."""
         from pei_nwdaf_data_ingestion_spark import registry
         from pei_nwdaf_data_ingestion_spark.queries import audit_ops, corpus_ops
 
         registry.load_all()
         sf = "/root/testdata/sf0.001"
+        sc = spark.sparkContext
+
+        def reused(group, projection):
+            # the query left the entry behind: reading it back runs
+            # neither the build nor the gate job
+            sc.setJobGroup(group, group)
+            got = projection(spark, sf)
+            sc.setJobGroup("", "")
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+            return got
+
         registry.QUERIES["graph_triangle_count"](spark, sf).collect()
-        key = (spark.sparkContext.applicationId, sf)
-        assert key in corpus_ops._TRI_PROJ_CACHE
-        proj1, n1, mx1 = corpus_ops._TRI_PROJ_CACHE[key]
+        proj1, n1, mx1 = reused("tri_reuse", corpus_ops._tri_projection)
         assert n1 >= 3 and mx1 >= 1
         registry.QUERIES["graph_triangle_count"](spark, sf).collect()
-        assert corpus_ops._TRI_PROJ_CACHE[key][0] is proj1  # not rebuilt
+        assert corpus_ops._tri_projection(spark, sf)[0] is proj1  # not rebuilt
         registry.QUERIES["graph_clustering_coeff"](spark, sf).collect()
-        assert key in audit_ops._BASKET_PROJ_CACHE
-        bproj, badj, bn, bmx = audit_ops._BASKET_PROJ_CACHE[key]
+        bproj, _, bn, bmx = reused("basket_reuse", audit_ops._basket_projection)
         assert bn > 0 and bmx >= 1
         registry.QUERIES["graph_clustering_coeff"](spark, sf).collect()
-        assert audit_ops._BASKET_PROJ_CACHE[key][0] is bproj
+        assert audit_ops._basket_projection(spark, sf)[0] is bproj
 
 
 class TestAnalyticsOpsSession2:
@@ -1686,17 +1694,11 @@ class TestHotBucketCap:
         cap active the 12-doc clique still resolves to ONE component."""
         from pei_nwdaf_data_ingestion_spark.queries import advanced, llm
 
-        llm._MH_PAIRS_CACHE.clear()
         monkeypatch.setattr(llm, "_MH_BUCKET_CAP", 8)
-        try:
-            labels = {
-                r["doc_id"]: r["component_id"]
-                for r in advanced.dedup_cluster_components(
-                    spark, clique_sf_dir
-                ).collect()
-            }
-        finally:
-            llm._MH_PAIRS_CACHE.clear()
+        labels = {
+            r["doc_id"]: r["component_id"]
+            for r in advanced.dedup_cluster_components(spark, clique_sf_dir).collect()
+        }
         assert {labels[d] for d in self.CLIQUE} == {min(self.CLIQUE)}
 
     def test_capped_oracle_fixes_same_pairs(self, spark, clique_sf_dir):
@@ -1729,12 +1731,8 @@ class TestHotBucketCap:
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
         lost = 12 * 11 // 2 - 11  # quadratic pair space minus the star
-        llm._MH_PAIRS_CACHE.clear()
         monkeypatch.setattr(llm, "_MH_BUCKET_CAP", 8)
-        try:
-            row = llm.dedup_lsh_recall_audit(spark, clique_sf_dir).collect()[0]
-        finally:
-            llm._MH_PAIRS_CACHE.clear()
+        row = llm.dedup_lsh_recall_audit(spark, clique_sf_dir).collect()[0]
         assert row["n_edges_lost"] == lost
         assert row["n_common"] == row["n_exact_blocked"] - lost
         assert 0 < row["recall_micro"] < 1_000_000

@@ -74,12 +74,11 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
     never coalesce a non-tiny table below the shuffle width - a
     1-partition cached documents table starved every self-join pipeline
     (PPJoin measured 2-3x slower).  Tiny dims still coalesce to 1."""
-    import os
+    from pei_nwdaf_data_ingestion_spark import materialize
 
     monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
     sf = "/root/testdata/sf0.01"  # lineitem is ~1 MiB here (>= 256 KiB gate)
-    saved = dict(catalog._CACHE)
-    catalog._CACHE.clear()
+    materialize.clear(under=sf)
     try:
         li = catalog.load(spark, sf, "lineitem")
         shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -87,7 +86,4 @@ def test_cache_partitioning_floors_at_shuffle_width(spark, monkeypatch):
         assert li.rdd.getNumPartitions() >= want
         assert catalog.load(spark, sf, "region").rdd.getNumPartitions() == 1
     finally:
-        for df in catalog._CACHE.values():
-            df.unpersist(blocking=True)
-        catalog._CACHE.clear()
-        catalog._CACHE.update(saved)
+        materialize.clear(under=sf)

@@ -74,9 +74,6 @@ class TestConvergedTwinsOnEmptyInput:
         from pei_nwdaf_data_ingestion_spark import graph
         from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
 
-        corpus_ops._EDGE_INDEX.pop(
-            (spark.sparkContext.applicationId, empty_sf_dir), None
-        )
         ed, deg = corpus_ops._edge_index(spark, empty_sf_dir)
         r, it, converged = graph.pagerank_converged(
             ed, deg, eps_micro=100, max_iter=50

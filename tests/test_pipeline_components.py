@@ -1152,6 +1152,52 @@ class TestMediaUnits:
         ]
         assert img.fmt.unique().tolist() == ["bmp"]
 
+    @pytest.mark.parametrize("bad", [[], "", ["unit", "nope"], "unit"])
+    def test_column_selection_is_validated(self, spark, bad):
+        """An empty selection, an unknown name or a bare string fails at
+        the call instead of building a zero-field or wrong schema."""
+        from pei_nwdaf_data_ingestion_spark.pipeline.multimodal import (
+            decode_media_units,
+        )
+
+        blobs = spark.createDataFrame([], "asset_id long, media_type string, content binary")
+        with pytest.raises(ValueError):
+            decode_media_units(blobs, columns=bad)
+
+
+class TestWorkerClosuresOutsideRepo:
+    def test_python_worker_queries_run_from_tmp(self, spark):
+        """Closures shipped to Python workers must pickle by value: from
+        cwd=/tmp, with the package on the driver's sys.path only (not on
+        PYTHONPATH, which workers inherit), workers cannot import it."""
+        import os
+        import subprocess
+        import sys
+
+        from pei_nwdaf_data_ingestion_spark import registry
+        from tests.conftest import SF_DIR as sf
+
+        ids = ("multimodal_decode", "multimodal_feature_vectors",
+               "multimodal_image_hist", "multimodal_audio_vad",
+               "multimodal_scene_cuts")
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = f"""import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from pei_nwdaf_data_ingestion_spark import registry
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+registry.load_all()
+for name in {ids!r}:
+    print(name, registry.QUERIES[name](spark, {sf!r}).count(), flush=True)
+"""
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        r = subprocess.run([sys.executable, "-c", script], cwd="/tmp", env=env,
+                           capture_output=True, text=True, timeout=600)
+        assert r.returncode == 0, r.stderr[-3000:]
+        registry.load_all()
+        want = [f"{n} {registry.QUERIES[n](spark, sf).count()}" for n in ids]
+        assert r.stdout.splitlines()[: len(ids)] == want
+
 
 class TestAudioVad:
     def test_vad_ledger_is_internally_consistent(self, spark):
@@ -1327,10 +1373,8 @@ class TestLabelPropagation:
 
     def test_two_components_converge_to_min_labels(self, spark, lpa_sf_dir):
         from pei_nwdaf_data_ingestion_spark import registry
-        from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
 
         registry.load_all()
-        corpus_ops._EDGE_INDEX.clear()  # keyed on (app, sf): tmp dir differs
         got = registry.QUERIES["graph_label_propagation"](
             spark, lpa_sf_dir
         ).toPandas()
@@ -1351,11 +1395,9 @@ class TestLabelPropagation:
         produce the exact top-20 ledger the Spark plan emits."""
         from pei_nwdaf_data_ingestion_spark import registry
         from pei_nwdaf_data_ingestion_spark.catalog import load
-        from pei_nwdaf_data_ingestion_spark.queries import corpus_ops
 
         registry.load_all()
         sf = "/root/testdata/sf0.001"
-        corpus_ops._EDGE_INDEX.clear()
         got = registry.QUERIES["graph_label_propagation"](spark, sf).toPandas()
         li = load(spark, sf, "lineitem").select("l_suppkey", "l_partkey").toPandas()
         edges = sorted({(int(s), int(p)) for s, p in zip(li.l_suppkey, li.l_partkey)})

@@ -753,7 +753,6 @@ class TestMinhashPairRegimes:
         # localCheckpoint replaces the whole subtree with an RDD scan)
         from pei_nwdaf_data_ingestion_spark.queries import llm
 
-        llm._MH_PAIRS_CACHE.clear()
         return llm._minhash_pairs_plan(spark, SF_DIR)
 
     def test_broadcast_regime_plan(self, spark):
@@ -785,7 +784,6 @@ class TestMinhashPairRegimes:
         base = {
             (r["doc_a"], r["doc_b"]) for r in self._fresh_pairs(spark).collect()
         }
-        llm._MH_PAIRS_CACHE.clear()
         monkeypatch.setattr(llm, "_MH_BROADCAST_BYTES", 0)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -797,7 +795,6 @@ class TestMinhashPairRegimes:
             got = {(r["doc_a"], r["doc_b"]) for r in df.collect()}
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-            llm._MH_PAIRS_CACHE.clear()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
